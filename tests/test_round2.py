@@ -328,7 +328,7 @@ def test_mixture_weights_sum_to_one(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_cli_pipeline_end_to_end(spark, tmp_path):
+def test_cli_pipeline_end_to_end(spark, tmp_path, capsys):
     import ucl_data_pipeline_spark.__main__ as cli
 
     data = tmp_path / "data"
@@ -343,6 +343,11 @@ def test_cli_pipeline_end_to_end(spark, tmp_path):
         ["pipeline", "--data-dir", str(data), "--out-dir", str(out)]
     )
     assert rc == 0
+    # The validation lines report what the sinks wrote; the empty
+    # UPCOMING output runs the zero-row observation path end to end.
+    printed = capsys.readouterr().out.splitlines()
+    assert "[HIST_matches] rows=1 cols=20 missing=[]" in printed
+    assert "[UPCOMING_fixtures] rows=0 cols=18 missing=[]" in printed
     hist = spark.read.option("header", True).csv(str(out / "HIST_matches"))
     rows = hist.collect()
     assert len(rows) == 1

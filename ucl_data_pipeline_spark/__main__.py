@@ -50,8 +50,10 @@ def cmd_run(args: argparse.Namespace) -> int:
         df.explain("formatted")
         return 0
     if args.out:
-        df.write.mode("overwrite").parquet(args.out)
-        print(f"wrote {args.out}")
+        from ucl_data_pipeline_spark.sources.io import write_parquet
+
+        n_rows = write_parquet(df, args.out)
+        print(f"wrote {args.out} rows={n_rows}")
         return 0
     df.show(args.limit, truncate=False)
     return 0
@@ -68,7 +70,8 @@ def cmd_pipeline(args: argparse.Namespace) -> int:
       team_name_map.csv stadiums.csv ref_baselines.csv injuries.csv
       lineups.csv xg_metrics_hybrid.csv teams_master.csv
     Outputs: HIST_matches.csv, UPCOMING_fixtures.csv (+ a printed
-    validation summary per output).
+    validation summary per output, taken from what the sink wrote: each
+    output lineage runs once).
     """
     from pyspark.sql import functions as F
 
@@ -131,9 +134,9 @@ def cmd_pipeline(args: argparse.Namespace) -> int:
         )
         final = builder(enriched)
         out_path = os.path.join(args.out_dir, out_name)
-        write_csv(final, out_path)
+        n_rows = write_csv(final, out_path)
         outputs.append((out_name, final))
-        print(f"wrote {out_path}")
+        print(f"wrote {out_path} rows={n_rows}")
     reports = validation_report({name: df for name, df in outputs})
     for out_name, rep in reports.items():
         print(

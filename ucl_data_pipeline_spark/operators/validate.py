@@ -12,6 +12,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ucl_data_pipeline_spark.sources.io import read_written, written
+
 
 @dataclass(frozen=True)
 class TableReport:
@@ -48,15 +50,25 @@ def summarize(
     n_sample: int = 5,
 ) -> TableReport:
     """V2: row count + column list + head sample + V1 missing-column
-    list (reference scripts/validate_data.py:9-14,20-27 — `.head(5)`
-    becomes `.limit(5)`; the count is the only full-table action).
+    list (reference scripts/validate_data.py:9-14,20-27, which reports
+    the output FILES: their row count and ``.head(5)``).
+
+    A frame a file sink wrote (``sources.io.written``) is reported from
+    that write: the row count the sink observed while writing, and the
+    sample read back from the written files (one partition, so one job).
+    Its lineage does not run again. A frame never written falls back to
+    ``limit(n_sample)`` + ``count()``, two passes over its lineage.
     """
-    sample = [r.asDict() for r in df.limit(n_sample).collect()]
+    rec = written(df)
+    if rec is None:
+        head, n_rows = df, df.count()
+    else:
+        head, n_rows = read_written(df, rec).coalesce(1), rec.n_rows
     return TableReport(
         name=name,
-        n_rows=df.count(),
+        n_rows=n_rows,
         columns=list(df.columns),
-        sample=sample,
+        sample=[r.asDict() for r in head.limit(n_sample).collect()],
         missing_columns=(
             required_columns_check(df, required) if required is not None else []
         ),

@@ -220,7 +220,7 @@ def theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the shared ``bucketed_rank_select`` so quantile_sample_error's
     # exact side reuses one selection spelling. kk = ⌈n/2⌉, the lower
     # median, exactly the old inline (n+1)/2 truncation.
-    one = spark.range(1).select(F.lit(1).alias("__rid"))
+    one = spark.range(1).select(F.lit(1).alias("rid"))
     sel = bucketed_rank_select(
         pairs, "slope6", one, ((F.col("__n") + 1) / 2).cast("long")
     )

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ucl_data_pipeline_spark.functions import text as TX
 from ucl_data_pipeline_spark.functions import vector as VX
 from ucl_data_pipeline_spark.plans.registry import register
-from ucl_data_pipeline_spark.sources.io import read_table, stats_barrier
+from ucl_data_pipeline_spark.sources.io import Observed, read_table, stats_barrier
 
 # Shared SQL fragments (duplicated verbatim into each oracle so every
 # oracle stays a self-contained statement).
@@ -1344,28 +1344,35 @@ def cc_edge_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-superstep broadcast rebuild in the CC loop scanned all 66 as
     separate tasks — pure scheduling overhead, and the cause of the
     r12 scaling block's 8-core-beats-32 inversion on this family. The
-    count() after the checkpoint is a narrow read of the materialized
-    RDD (no lineage re-execution); the partition target scales with
-    the dup-graph size (~64k pair rows ≈ 1.5 MB per partition),
-    capped at default parallelism, so a corpus-scale dup graph keeps
-    full parallelism while a bench-scale one collapses to 1.
+    pair count comes from an observation on the checkpoint job itself
+    (``sources.io.Observed``), not from a count() job after it; the
+    partition target scales with the dup-graph size (~64k pair rows ≈
+    1.5 MB per partition), capped at default parallelism, so a
+    corpus-scale dup graph keeps full parallelism while a bench-scale
+    one collapses to 1.
 
     r13 (verdict task 3): the near and exact lineages now share ONE
     exact-dup collapse via ``_rep_frames`` — previously the exact
     pairs re-scanned documents and re-ran the text-grain groupBy that
     ``_rep_features`` had already computed for the LSH side. Both
     caches are released as soon as the pair set is checkpointed
-    (lineage truncated), so CC queries no longer leak cache entries
-    for the session."""
+    (lineage truncated), so ``cc_edge_set`` leaves no cache entry of
+    its own behind beyond the returned edge frame, which its caller
+    unpersists. Other ``_rep_frames`` consumers differ:
+    ``split_leakage_audit`` returns a lazy frame over its persisted
+    ``rep``/``feats`` and so relies on ``spark.catalog.clearCache()``
+    (the bench's per-run clear, the test session's teardown) to
+    release them."""
     rep, feats, exact = _rep_frames(spark, sf_dir)
     feats = feats.persist()
     near = dedup_minhash_lsh(spark, sf_dir, feats=feats).select(
         "doc_a", "doc_b"
     )
-    pairs = near.unionByName(exact).localCheckpoint()
+    observed = Observed(near.unionByName(exact), n=F.count(F.lit(1)))
+    pairs = observed.df.localCheckpoint()
     feats.unpersist()
     rep.unpersist()
-    n_pairs = pairs.count()
+    n_pairs = observed.get(fallback=pairs)["n"]
     n_parts = max(
         1,
         min(
@@ -1433,7 +1440,9 @@ def dedup_connected_components(
     own-label-flagged union gives both the new label and the old one),
     so each round is ONE materializing job instead of two — the old
     shape paid a second join+count job per round purely to decide
-    termination. Results are bit-identical: same min-label fixpoint,
+    termination. The changed-label count is an observation on that
+    job (``sources.io.Observed``), not a count() job over the
+    checkpoint. Results are bit-identical: same min-label fixpoint,
     same early-exit round (isolated docs never contributed to either).
     """
     owns_edges = edges is None
@@ -1451,7 +1460,7 @@ def dedup_connected_components(
             .join(labels, F.col("dst") == F.col("doc_id"))
             .select(F.col("src").alias("doc_id"), "component_id")
         )
-        merged = (
+        step = Observed(
             labels.withColumn("__own", F.lit(1))
             .unionByName(nbr.withColumn("__own", F.lit(0)))
             .groupBy("doc_id")
@@ -1460,12 +1469,11 @@ def dedup_connected_components(
                 F.min(
                     F.when(F.col("__own") == 1, F.col("component_id"))
                 ).alias("__old"),
-            )
-            .localCheckpoint()
+            ),
+            changed=F.count_if(F.col("component_id") != F.col("__old")),
         )
-        changed = merged.filter(
-            F.col("component_id") != F.col("__old")
-        ).count()
+        merged = step.df.localCheckpoint()
+        changed = step.get(fallback=merged)["changed"]
         labels = merged.select("doc_id", "component_id")
         if changed == 0:
             break

@@ -71,6 +71,17 @@ def engine_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
         "spark.sql.autoBroadcastJoinThreshold": "33554432",
         # Parquet writers should emit timestamps readable everywhere
         "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+        # PySpark 4.1 records the Python call site of every DataFrame and
+        # Column API call (``pyspark.errors.utils._with_origin``: several
+        # Py4J round trips per ``F.*`` call) so a failing expression can
+        # name the user line that built it; its docs call that "a
+        # non-trivial performance overhead". Off, plan construction is
+        # Py4J-bound work only (``enrich_matches`` builds 1.3-1.5 s ->
+        # 0.85-1.1 s on 4 vCPUs). The trade: DataFrame error messages
+        # lose their Python call-site context; the error class, message
+        # and failing expression are still reported. PySpark reads this
+        # once per Python process, from the first active session.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
 
 

@@ -7,8 +7,12 @@ Re-expresses the reference's CSV-file dataflow Spark-first:
 - missing-file tolerance (reference ``safe_read``,
   scripts/enrich_features.py:17-18) → ``safe_read_csv`` returning an
   empty typed DataFrame.
-- S5/S6 sinks → ``write_csv`` / ``write_parquet``; an empty DataFrame
-  with a declared schema IS the "empty-but-valid" file (reference
+- S5/S6 sinks → ``write_csv`` / ``write_parquet`` (plus ORC and JSON
+  lines), all through one writer that counts the rows it writes inside
+  the write job and records ``(path, format, n_rows)`` for the frame, so
+  validation reports the written output without re-running the lineage
+  (``written``/``read_written``). An empty DataFrame with a declared
+  schema IS the "empty-but-valid" file (reference
   scripts/fetch_the_odds_api.py:23-29).
 - S7 preflight repair (scripts/ensure_min_files.py:10-44) dissolves into
   ``conform`` — declared schemas + default stamping make "repair" a pure
@@ -26,9 +30,12 @@ writes partition by a date-derived column so downstream scans prune.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
+from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -263,21 +270,139 @@ def read_json_records(
     ).select("rec.*")
 
 
+class Observed:
+    """Aggregates computed inside the first action that runs a frame.
+
+    ``obs = Observed(df, n=F.count(F.lit(1)))`` attaches a Spark
+    ``Observation`` to ``df``; run the action on ``obs.df`` (a write, a
+    ``localCheckpoint``), then ``obs.get()`` returns ``{"n": ...}``. The
+    aggregate rides the pass that already ran: no extra job, where a
+    ``count()`` after a write would execute the whole lineage again.
+
+    Spark fills an observation from a query-execution listener, on the
+    listener bus, after the action returns; ``Observation.get`` blocks
+    until then, and forever if the executed plan never carried the
+    observation. ``get`` therefore drains the bus instead of waiting (the
+    action posted its end event before returning) and, if the metrics
+    are still absent, aggregates ``fallback`` (default: the unobserved
+    frame) in a job of its own.
+    """
+
+    def __init__(self, df: DataFrame, **metrics: Column) -> None:
+        self._src = df
+        self._exprs = [c.alias(name) for name, c in metrics.items()]
+        self._obs = Observation()
+        self.df = df.observe(self._obs, *self._exprs)
+
+    def get(self, fallback: DataFrame | None = None) -> dict[str, Any]:
+        # PySpark's Observation has no non-blocking check; its JVM
+        # object's future does.
+        future = self._obs._jo.future()
+        if not future.isCompleted():
+            sc = self._src.sparkSession.sparkContext
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+        if future.isCompleted():
+            return self._obs.get
+        frame = self._src if fallback is None else fallback
+        return frame.agg(*self._exprs).first().asDict()
+
+
+@dataclass(frozen=True)
+class WriteRecord:
+    """One sink write of a frame: absolute path, format, rows written."""
+
+    path: str
+    format: str
+    n_rows: int
+
+
+# Frame object → its last recorded write. Weak keys: a record lives as
+# long as the frame it describes. The lock keeps a drop-then-record from
+# racing another thread's write.
+_WRITES: weakref.WeakKeyDictionary[DataFrame, WriteRecord] = (
+    weakref.WeakKeyDictionary()
+)
+_WRITES_LOCK = threading.Lock()
+
+# Modes that always execute the frame's plan. ``append`` and ``ignore``
+# write plainly: ``ignore`` on an existing path runs nothing, yet Spark
+# still completes the observation (with zero rows).
+_RECORDED_MODES = ("overwrite", "error", "errorifexists", "default")
+
+# Reader options that parse what the sinks write.
+_READ_BACK_OPTIONS = {"csv": {"header": "true"}}
+
+
+def _path_key(path: str) -> str:
+    return path if "://" in path else os.path.abspath(path)
+
+
+def _write(
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    mode: str,
+    partition_by: list[str] | None = None,
+    **options: str,
+) -> int | None:
+    """The file sink behind every ``write_*``: write ``df`` to ``path`` and
+    return the rows written, counted inside the write job, for the
+    recorded modes; ``None`` for ``append``/``ignore``. Any write to a
+    path drops the records of frames written there before; a recorded
+    write then records ``df``."""
+    key = _path_key(path)
+    with _WRITES_LOCK:
+        for frame, rec in list(_WRITES.items()):
+            if rec.path == key:
+                _WRITES.pop(frame, None)
+    obs = None
+    if mode.lower() in _RECORDED_MODES:
+        obs = Observed(df, n_rows=F.count(F.lit(1)))
+    writer = (obs.df if obs else df).write.mode(mode).options(**options)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.format(fmt).save(path)
+    if obs is None:
+        return None
+    n_rows = int(obs.get()["n_rows"])
+    with _WRITES_LOCK:
+        _WRITES[df] = WriteRecord(key, fmt, n_rows)
+    return n_rows
+
+
+def written(df: DataFrame) -> WriteRecord | None:
+    """The last recorded sink write of this frame object, if any and if
+    no later write replaced the files."""
+    return _WRITES.get(df)
+
+
+def read_written(df: DataFrame, rec: WriteRecord) -> DataFrame:
+    """Scan the files ``rec`` describes with ``df``'s schema, in
+    ``df.columns`` order (a partitioned write puts its partition columns
+    last on re-scan)."""
+    back = (
+        df.sparkSession.read.schema(df.schema)
+        .options(**_READ_BACK_OPTIONS.get(rec.format, {}))
+        .format(rec.format)
+        .load(rec.path)
+    )
+    quoted = ("`" + c.replace("`", "``") + "`" for c in df.columns)
+    return back.select(*(F.col(c) for c in quoted))
+
+
 def write_parquet(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
-) -> None:
+) -> int | None:
     """Stage an immutable parquet output (the engine's interchange sink).
+    Returns the rows written (``None`` in append/ignore mode).
 
     ``partition_by`` a low-cardinality date-derived column for facts so
     downstream scans partition-prune (SURVEY.md §4.2 scale notes).
     """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    return _write(df, path, "parquet", mode, partition_by)
 
 
 def write_bucketed(
@@ -303,16 +428,18 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S5: headered CSV egress sink."""
-    df.write.mode(mode).option("header", "true").csv(path)
+def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> int | None:
+    """S5: headered CSV egress sink. Returns the rows written (``None``
+    in append/ignore mode)."""
+    return _write(df, path, "csv", mode, header="true")
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> int | None:
     """ORC egress sink (zlib default) — the columnar interchange format
     for Hive-ecosystem consumers; same predicate-pushdown/column-
-    pruning properties as parquet on re-scan."""
-    df.write.mode(mode).orc(path)
+    pruning properties as parquet on re-scan. Returns the rows written
+    (``None`` in append/ignore mode)."""
+    return _write(df, path, "orc", mode)
 
 
 def read_orc(
@@ -325,11 +452,12 @@ def read_orc(
     return reader.orc(path)
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> int | None:
     """JSON-lines egress sink — the common text-corpus interchange
     format (one document object per line). Columnar pushdown does NOT
-    apply on re-scan; use parquet for anything re-read hot."""
-    df.write.mode(mode).json(path)
+    apply on re-scan; use parquet for anything re-read hot. Returns the
+    rows written (``None`` in append/ignore mode)."""
+    return _write(df, path, "json", mode)
 
 
 def read_jsonl(
