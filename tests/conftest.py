@@ -2,12 +2,15 @@ from __future__ import annotations
 
 import os
 import sys
+from dataclasses import dataclass
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ucl_data_pipeline_spark import get_spark
+from ucl_data_pipeline_spark.plan_audit import single_partition_windows
+from ucl_data_pipeline_spark.plans import REGISTRY
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -27,3 +30,63 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@dataclass(frozen=True)
+class Built:
+    """One registry query as its function returned it, with the plan
+    facts the registry-wide gates read, snapshotted BEFORE anything
+    executes the frame (AQE rewrites ``executedPlan()`` in place once
+    the frame runs, so a later snapshot would depend on test order)."""
+
+    df: object
+    schema: object
+    physical: str  # pre-execution executedPlan() string (isFinalPlan=false)
+    optimized: str  # optimizedPlan() string
+    windows: int  # plan_audit.single_partition_windows
+
+
+class Census:
+    """Each registry query built at most once per test session.
+
+    Calling a query function re-runs every eager build job it fires
+    (collected split points, localCheckpoint, sizing counts), so the
+    registry-wide gates and the oracle test share one build per query.
+    A build that raised re-raises its exception on every request.
+    """
+
+    def __init__(self, spark, sf_dir: str):
+        self.spark, self.sf_dir = spark, sf_dir
+        self.built: dict[str, Built | Exception] = {}
+
+    def __getitem__(self, name: str) -> Built:
+        if name not in self.built:
+            self.built[name] = self._build(name)
+        got = self.built[name]
+        if isinstance(got, Exception):
+            raise got
+        return got
+
+    def items(self):
+        """(name, Built) for every registered query, in name order."""
+        for name in sorted(REGISTRY):
+            yield name, self[name]
+
+    def _build(self, name: str) -> Built | Exception:
+        try:
+            df = REGISTRY[name].fn(self.spark, self.sf_dir)
+            qe = df._jdf.queryExecution()
+            return Built(
+                df=df,
+                schema=df.schema,
+                physical=qe.executedPlan().toString(),
+                optimized=qe.optimizedPlan().toString(),
+                windows=single_partition_windows(df),
+            )
+        except Exception as exc:  # noqa: BLE001 — re-raised per request
+            return exc
+
+
+@pytest.fixture(scope="session")
+def census(spark, sf_dir) -> Census:
+    return Census(spark, sf_dir)

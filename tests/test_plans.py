@@ -10,30 +10,48 @@ the properties that decide 100 TB viability — not just results.
 
 from __future__ import annotations
 
-import pytest
+import re
 
 from ucl_data_pipeline_spark.plans import REGISTRY
 
 
-def _plan(spark, sf_dir, name: str) -> str:
-    df = REGISTRY[name].fn(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+def _plan(census, name: str) -> str:
+    return census[name].physical
 
 
-def _optimized(spark, sf_dir, name: str) -> str:
-    df = REGISTRY[name].fn(spark, sf_dir)
-    return df._jdf.queryExecution().optimizedPlan().toString()
+def _optimized(census, name: str) -> str:
+    return census[name].optimized
 
 
-def test_enrich_chain_broadcasts_all_dims(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "enrich_broadcast_join")
+def _paren_spans(text: str, token: str):
+    """(start, end) of every ``token...)`` call in ``text``, paren-matched
+    (``token`` ends with its opening paren)."""
+    for m in re.finditer(re.escape(token), text):
+        i, depth = m.end(), 1
+        while i < len(text) and depth:
+            depth += text[i] == "("
+            depth -= text[i] == ")"
+            i += 1
+        yield m.start(), i
+
+
+def _lambda_bodies(plan: str):
+    # Paren-matched extraction: the plan prints a whole Project node on
+    # one line, so a fixed window would swallow sibling expressions that
+    # legitimately tokenize OUTSIDE the lambda.
+    for start, end in _paren_spans(plan, "lambdafunction("):
+        yield plan[start + len("lambdafunction(") : end - 1]
+
+
+def test_enrich_chain_broadcasts_all_dims(census):
+    plan = _plan(census, "enrich_broadcast_join")
     assert plan.count("BroadcastHashJoin") == 3
     assert "SortMergeJoin" not in plan
     assert "Exchange hashpartitioning" not in plan  # fact side never shuffles
 
 
-def test_filter_and_pruning_reach_parquet_scan(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "filter_project")
+def test_filter_and_pruning_reach_parquet_scan(census):
+    plan = _plan(census, "filter_project")
     assert "IsNotNull(o_custkey)" in plan.split("PushedFilters")[1]
     assert "GreaterThan(o_totalprice,100000.0)" in plan.split("PushedFilters")[1]
     # Only the 5 needed columns are scanned (column pruning): the
@@ -41,29 +59,29 @@ def test_filter_and_pruning_reach_parquet_scan(spark, sf_dir):
     assert "o_orderpriority" not in plan
 
 
-def test_no_python_eval_outside_python_operators(spark, sf_dir):
+def test_no_python_eval_outside_python_operators(census):
     for name in ("pricing_summary", "haversine_travel", "dedup_minhash_lsh",
                  "text_quality_score", "embedding_topk_cosine",
                  "session_window_agg"):
-        plan = _plan(spark, sf_dir, name)
+        plan = _plan(census, name)
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
 
 
-def test_all_queries_free_of_plan_smells(spark, sf_dir):
+def test_all_queries_free_of_plan_smells(census):
     # Engine-wide invariants over every registered query's physical
     # plan: no cartesian products, and no Python evaluation anywhere
     # except the sanctioned multimodal Arrow stage. Catches regressions
     # the per-query tests don't cover.
     python_ok = {"multimodal_feature_extract", "multimodal_frame_sample"}
-    for name in REGISTRY:
-        plan = _plan(spark, sf_dir, name)
+    for name, built in census.items():
+        plan = built.physical
         assert "CartesianProduct" not in plan, name
         if name not in python_ok:
             for smell in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
                 assert smell not in plan, (name, smell)
 
 
-def test_registered_outputs_atomic(spark, sf_dir):
+def test_registered_outputs_atomic(census):
     # Registry convention (plans/registry.py docstring): a registered
     # query's result schema contains only atomic columns — the driver
     # canonicalizes with pandas sort_values/factorize, which cannot
@@ -72,29 +90,28 @@ def test_registered_outputs_atomic(spark, sf_dir):
     # (concat_ws / to_json after array_sort) instead.
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    for name in REGISTRY:
-        df = REGISTRY[name].fn(spark, sf_dir)
+    for name, built in census.items():
         complex_cols = [
             f.name
-            for f in df.schema.fields
+            for f in built.schema.fields
             if isinstance(f.dataType, (ArrayType, MapType, StructType))
         ]
         assert not complex_cols, (name, complex_cols)
 
 
-def test_python_stage_only_in_multimodal(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "multimodal_feature_extract")
+def test_python_stage_only_in_multimodal(census):
+    plan = _plan(census, "multimodal_feature_extract")
     assert "MapInPandas" in plan  # the sanctioned Arrow-batched escape hatch
 
 
-def test_topn_avoids_total_sort(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "sort_limit_topn")
+def test_topn_avoids_total_sort(census):
+    plan = _plan(census, "sort_limit_topn")
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan
 
 
-def test_correlated_exists_becomes_semi_join(spark, sf_dir):
-    opt = _optimized(spark, sf_dir, "correlated_exists")
+def test_correlated_exists_becomes_semi_join(census):
+    opt = _optimized(census, "correlated_exists")
     assert "LeftSemi" in opt  # decorrelated, not per-row subquery
 
 
@@ -108,20 +125,20 @@ def test_whole_stage_codegen_on_flagship(spark, sf_dir):
     assert "*(1)" in plan
 
 
-def test_lsh_candidates_join_on_band_key(spark, sf_dir):
+def test_lsh_candidates_join_on_band_key(census):
     # The LSH self-join must be an equi-join (hash/sort-merge on the
     # band key), never a nested-loop cartesian.
-    plan = _plan(spark, sf_dir, "dedup_minhash_lsh")
+    plan = _plan(census, "dedup_minhash_lsh")
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_tpch_shapes_broadcast_dims_and_topn(spark, sf_dir):
+def test_tpch_shapes_broadcast_dims_and_topn(census):
     for name in ("shipping_priority_top10", "returned_items_top20"):
-        plan = _plan(spark, sf_dir, name)
+        plan = _plan(census, name)
         assert "BroadcastHashJoin" in plan, name
         assert "TakeOrderedAndProject" in plan, name  # top-N, not global sort
-    q5 = _plan(spark, sf_dir, "local_supplier_volume")
+    q5 = _plan(census, "local_supplier_volume")
     # All four dimension edges broadcast (at sf0.001 the filtered
     # orders side broadcasts too — the right call at that size); at
     # most the lineitem⨝orders fact spine may shuffle. Never a
@@ -131,25 +148,25 @@ def test_tpch_shapes_broadcast_dims_and_topn(spark, sf_dir):
     assert "CartesianProduct" not in q5 and "BroadcastNestedLoopJoin" not in q5
 
 
-def test_range_join_is_broadcast_nested_loop(spark, sf_dir):
+def test_range_join_is_broadcast_nested_loop(census):
     # The correct physical plan for fact × tiny-band non-equi join:
     # broadcast the 3-row bands, never shuffle or cartesian the fact.
-    plan = _plan(spark, sf_dir, "range_join_bands")
+    plan = _plan(census, "range_join_bands")
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
     assert "Exchange rangepartitioning" not in plan
 
 
-def test_as_of_join_single_shuffle(spark, sf_dir):
+def test_as_of_join_single_shuffle(census):
     # Carry-forward formulation: exactly one hash exchange (user_id),
     # no join operator at all.
-    plan = _plan(spark, sf_dir, "as_of_join")
+    plan = _plan(census, "as_of_join")
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_deterministic_sample_pushes_filter_to_scan(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "deterministic_sample")
+def test_deterministic_sample_pushes_filter_to_scan(census):
+    plan = _plan(census, "deterministic_sample")
     assert "Exchange" not in plan  # pure parallel filter, no shuffle
 
 
@@ -295,22 +312,21 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert got_years == {1996}
 
 
-def test_bloom_fpr_broadcasts_filter_never_shuffles_probes(spark, sf_dir):
+def test_bloom_fpr_broadcasts_filter_never_shuffles_probes(census):
     # The bloom words (≤512 rows) and member set are broadcast; the
     # probe side joins them without any SortMergeJoin — the shape that
     # lets the runtime filter ship to a 100 TB fact scan.
-    plan = _plan(spark, sf_dir, "bloom_semi_join_fpr")
+    plan = _plan(census, "bloom_semi_join_fpr")
     assert plan.count("BroadcastHashJoin") >= 3
     assert "SortMergeJoin" not in plan
 
 
-def test_spearman_grain_has_no_raw_row_sort(spark, sf_dir):
+def test_spearman_grain_has_no_raw_row_sort(census):
     # The grain spelling's windows run over (flag, value) grain AFTER
     # a hash-agg — every Sort in the plan must sit above an aggregate,
     # never directly on the lineitem scan (that raw-row sort is
     # exactly what the window spelling pays 5.66x for at 10x).
-    df = REGISTRY["spearman_rank_via_grain"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(census, "spearman_rank_via_grain")
     for frag in plan.split("Sort ")[1:]:
         # each sort's subtree (the remainder string) must contain an
         # upstream HashAggregate before the parquet scan appears
@@ -319,31 +335,31 @@ def test_spearman_grain_has_no_raw_row_sort(spark, sf_dir):
         )
 
 
-def test_ivf2_codebook_and_probe_broadcast(spark, sf_dir):
+def test_ivf2_codebook_and_probe_broadcast(census):
     # nprobe=2 keeps the nprobe=1 shape: centroid codebook and probe
     # assignments broadcast; candidates join on the list id.
-    plan = _plan(spark, sf_dir, "embedding_ivf2_topk")
+    plan = _plan(census, "embedding_ivf2_topk")
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
 
-def test_dup_span_pairs_never_cartesian(spark, sf_dir):
+def test_dup_span_pairs_never_cartesian(census):
     # Pair generation must go through the span-key equi-join (bounded
     # by the df cap), never a cross product.
-    plan = _plan(spark, sf_dir, "dup_span_pairs")
+    plan = _plan(census, "dup_span_pairs")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_mixture_fold_is_scalar_no_extra_shuffle(spark, sf_dir):
+def test_mixture_fold_is_scalar_no_extra_shuffle(census):
     # The order-pinned fold reduces per-source terms inside one
     # aggregate: the plan has the per-source hash-agg plus a scalar
     # agg, and the final weight projection joins ONE broadcast row.
-    plan = _plan(spark, sf_dir, "mixture_temperature_weights")
+    plan = _plan(census, "mixture_temperature_weights")
     assert "SortMergeJoin" not in plan
 
 
-def test_no_expensive_expr_inside_lambdas(spark, sf_dir):
+def test_no_expensive_expr_inside_lambdas(census):
     # Catalyst has no CSE across higher-order-function lambda
     # boundaries: an outer expression referenced inside a transform/
     # filter/aggregate lambda is re-evaluated once per ELEMENT.
@@ -354,27 +370,12 @@ def test_no_expensive_expr_inside_lambdas(spark, sf_dir):
     # a lambda body (a let-bound input appears as a cheap lambda-var
     # reference instead, and the one legitimate split sits OUTSIDE in
     # the wrapper array).
-    import re
-
     expensive = re.compile(
         r"split\(|regexp_extract_all\(|regexp_replace\(|sentences\("
     )
-    def _lambda_bodies(plan: str):
-        # Paren-matched extraction: the plan prints a whole Project
-        # node on one line, so a fixed window would swallow sibling
-        # expressions that legitimately tokenize OUTSIDE the lambda.
-        for m in re.finditer(r"lambdafunction\(", plan):
-            i, depth = m.end(), 1
-            while i < len(plan) and depth:
-                depth += plan[i] == "("
-                depth -= plan[i] == ")"
-                i += 1
-            yield plan[m.end() : i - 1]
-
     offenders = []
-    for name in REGISTRY:
-        plan = _optimized(spark, sf_dir, name)
-        if any(expensive.search(b) for b in _lambda_bodies(plan)):
+    for name, built in census.items():
+        if any(expensive.search(b) for b in _lambda_bodies(built.optimized)):
             offenders.append(name)
     assert not offenders, (
         f"expensive expression inside a lambda (per-element "
@@ -383,7 +384,7 @@ def test_no_expensive_expr_inside_lambdas(spark, sf_dir):
     )
 
 
-def test_no_duplicated_fold_inside_lambdas(spark, sf_dir):
+def test_no_duplicated_fold_inside_lambdas(census):
     # The round-11 embedding_pq_topk defect class: the SAME expensive
     # fold subtree appearing twice inside one lambda body — e.g.
     # array_position(dists, array_min(dists)) where dists is an
@@ -397,33 +398,13 @@ def test_no_duplicated_fold_inside_lambdas(spark, sf_dir):
     # subtree inside every lambda body of every registered query's
     # optimized plan and flags any subtree appearing more than once
     # within one body (>= 40 chars — skips degenerate tiny folds).
-    import re
-
-    def _bodies(plan: str):
-        for m in re.finditer(r"lambdafunction\(", plan):
-            i, depth = m.end(), 1
-            while i < len(plan) and depth:
-                depth += plan[i] == "("
-                depth -= plan[i] == ")"
-                i += 1
-            yield plan[m.end() : i - 1]
-
-    def _spans(body: str, token: str):
-        for m in re.finditer(re.escape(token), body):
-            i, depth = m.end(), 1
-            while i < len(body) and depth:
-                depth += body[i] == "("
-                depth -= body[i] == ")"
-                i += 1
-            yield body[m.start() : i]
-
     offenders = []
-    for name in REGISTRY:
-        plan = _optimized(spark, sf_dir, name)
-        for b in _bodies(plan):
+    for name, built in census.items():
+        for b in _lambda_bodies(built.optimized):
             seen: dict[str, int] = {}
             for tok in ("aggregate(", "reduce("):
-                for s in _spans(b, tok):
+                for start, end in _paren_spans(b, tok):
+                    s = b[start:end]
                     if len(s) >= 40:
                         seen[s] = seen.get(s, 0) + 1
             if any(c > 1 for c in seen.values()):
@@ -509,18 +490,15 @@ SINGLE_PARTITION_WINDOW_GRAINS = {
 }
 
 
-# The walker is the SHARED implementation in plan_audit (also behind
-# tools/window_census.py) — one source of truth so the gate and the
-# census tool cannot drift apart, and ReusedExchange feeds (zero
-# children, re-emitting a planned SinglePartition exchange) count like
-# Exchange feeds so duplicated offending sites cannot undercount
-# (round-9 advisor finding).
-from ucl_data_pipeline_spark.plan_audit import (  # noqa: E402
-    single_partition_windows as _single_partition_windows,
-)
+# The census counts with plan_audit.single_partition_windows, the
+# detector also behind `tools/plan_audit.py windows` — one source of
+# truth so the gate and the census tool cannot drift apart, and
+# ReusedExchange feeds (zero children, re-emitting a planned
+# SinglePartition exchange) count like Exchange feeds so duplicated
+# offending sites cannot undercount (round-9 advisor finding).
 
 
-def test_single_partition_windows_are_allowlisted(spark, sf_dir):
+def test_single_partition_windows_are_allowlisted(census):
     # The round-8 verdict's scale-killer class: a row_number/rank/
     # cumulative window over an unpartitioned Window whose input is a
     # fact/corpus table means ONE task sorts everything at 100 TB.
@@ -529,9 +507,8 @@ def test_single_partition_windows_are_allowlisted(spark, sf_dir):
     # fixed in round 9 — vsm/bm25/rocchio/mann_whitney/heaps/
     # saturation/decile_lift/monetary_unit) fails here.
     offenders = []
-    for name in REGISTRY:
-        df = REGISTRY[name].fn(spark, sf_dir)
-        n = _single_partition_windows(df)
+    for name, built in census.items():
+        n = built.windows
         allowed = SINGLE_PARTITION_WINDOW_GRAINS.get(name, (0, ""))[0]
         if n > allowed:
             offenders.append((name, n, allowed))

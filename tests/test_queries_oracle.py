@@ -67,9 +67,9 @@ def _pandas_kind(series) -> str:
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_matches_oracle(spark, sf_dir, duck, name):
+def test_query_matches_oracle(census, duck, name):
     q = REGISTRY[name]
-    sdf = q.fn(spark, sf_dir)
+    sdf = census[name].df
     srows = [tuple(r) for r in sdf.collect()]
     if q.oracle is None:
         assert isinstance(srows, list)  # rows-only smoke
