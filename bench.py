@@ -51,9 +51,11 @@ regression flags are computed on ratios.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -125,7 +127,11 @@ _EXCLUDED_MEAN_TAGS = ("baseline", "iterative")
 # check instead of an adjudication cycle (r7 spent one proving
 # robust_zscore's drift was environment-not-plan). Tokens chosen to
 # capture exactly what a plan regression would move: shuffle count and
-# kind, join strategy, aggregate/window/sort operators.
+# kind, join strategy, aggregate/window/sort operators. A token is a
+# node name, optionally followed by the start of the node's detail
+# ("Exchange hashpartitioning"); it is matched against each plan line's
+# WHOLE node name, so "HashAggregate" never counts an
+# ObjectHashAggregate and "Window" never counts a WindowGroupLimit.
 _PLAN_TOKENS = (
     "Exchange hashpartitioning",
     "Exchange rangepartitioning",
@@ -144,6 +150,9 @@ _PLAN_TOKENS = (
     "TakeOrderedAndProject",
     "InMemoryTableScan",
 )
+# One plan-string line: tree drawing, an optional whole-stage-codegen
+# "*(N) " marker, then the node name and its detail.
+_PLAN_NODE = re.compile(r"^[\s:+\-]*(?:\*\(\d+\) )?(\w+)(.*)$")
 
 
 def _execute(df) -> None:
@@ -174,8 +183,13 @@ def _plan_counters(df) -> dict[str, int] | None:
     # An executed AdaptiveSparkPlanExec stringifies BOTH its final and
     # its initial plan — count tokens in the final section only.
     s = s.split("== Initial Plan ==")[0]
-    out = {t.strip(): s.count(t) for t in _PLAN_TOKENS}
-    return {k: v for k, v in out.items() if v}
+    out: dict[str, int] = {}
+    for m in filter(None, map(_PLAN_NODE.match, s.splitlines())):
+        for t in _PLAN_TOKENS:
+            node, _, detail = t.strip().partition(" ")
+            if m[1] == node and m[2].lstrip().startswith(detail):
+                out[t.strip()] = out.get(t.strip(), 0) + 1
+    return out
 
 
 # Helper modules whose edits must also invalidate the source hash:
@@ -211,6 +225,9 @@ _REGISTRY_HELPER_FNS: tuple[str, ...] = (
     "bucket_offsets",
     "bucketed_running_sum",
     "bucketed_row_number",
+    "sql_percentile_disc",
+    "percentile_disc_rank",
+    "bucketed_rank_select",
 )
 # Module-level constants those helpers READ (round-10 advisor): the
 # function-grain digest sees only the helpers' source text, so editing
@@ -222,6 +239,7 @@ _REGISTRY_HELPER_CONSTS: tuple[str, ...] = (
     "_BUCKET_TARGET_ROWS",
     "_BUCKET_MIN",
     "_BUCKET_MAX",
+    "_RANK_SELECT_BUCKETS",
 )
 _MODULE_DIGEST_CACHE: dict[str, str] = {}
 
@@ -268,9 +286,34 @@ def _module_digest(module) -> str:
     return _MODULE_DIGEST_CACHE[key]
 
 
+@functools.lru_cache(maxsize=None)
+def _plan_module_deps(mod_name: str) -> tuple[str, ...]:
+    """The other ``ucl_data_pipeline_spark.plans.*`` modules that
+    ``mod_name`` imports from (``from X import ...`` at module level or
+    inside a function). plans.registry is left out: it is digested at
+    helper grain (see _SHARED_HELPER_MODULES)."""
+    import ast
+    import importlib
+    import inspect
+
+    try:
+        src = inspect.getsource(importlib.import_module(mod_name))
+    except (OSError, TypeError, ImportError):
+        return ()
+    deps = {
+        node.module
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.ImportFrom)
+        and (node.module or "").startswith("ucl_data_pipeline_spark.plans.")
+    }
+    deps -= {mod_name, "ucl_data_pipeline_spark.plans.registry"}
+    return tuple(sorted(deps))
+
+
 def _source_hash(name: str) -> str | None:
     """md5 over the query function's source text PLUS its defining
-    module's source PLUS the shared helper modules it may call.
+    module's source PLUS the plan modules that module imports from
+    PLUS the shared helper modules it may call.
     Plan-unchanged auto-clearing additionally requires the SOURCE to
     be unchanged: expression-level edits (projection math, lambda
     bodies) leave every operator token count identical, so without
@@ -287,6 +330,8 @@ def _source_hash(name: str) -> str | None:
         mod = inspect.getmodule(fn)
         if mod is not None:
             parts.append(_module_digest(mod))
+            for dep in _plan_module_deps(mod.__name__):
+                parts.append(_module_digest(importlib.import_module(dep)))
         for mod_name in _SHARED_HELPER_MODULES:
             parts.append(_module_digest(importlib.import_module(mod_name)))
         parts.append(_registry_helpers_digest())

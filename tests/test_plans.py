@@ -468,8 +468,8 @@ SINGLE_PARTITION_WINDOW_GRAINS = {
     "runs_test_daily_revenue": (1, "calendar day grain"),
     "share_of_parent_rollup": (1, "rollup group grain"),
     "sprt_sequential_test": (3, "calendar day grain (sequential walk)"),
-    # r13: both rank-selection queries share bucketed_rank_select
-    # (extras22); its ≤4096-row bucket-grain prefix-count window
+    # r13: the rank-selection queries share bucketed_rank_select
+    # (plans/registry.py); its ≤4096-row bucket-grain prefix-count window
     # appears twice in the lazy plan (target-bucket locate + rank
     # attach reference the same tiny subtree) — bounded by the bucket
     # count at any data size.

@@ -50,6 +50,14 @@ def test_walker_sees_below_aqe_and_inside_cached_plans(spark):
         vocab.unpersist()
 
 
+def test_walker_descends_into_subquery_plans(census):
+    # not_in_null_semantics is a one-row projection of two scalar
+    # subqueries: all four parquet scans it runs sit in subquery plans.
+    names = [n.nodeName() for n in walk(physical_plan(census["not_in_null_semantics"].df))]
+    assert names.count("Subquery") == 2
+    assert sum(n.startswith("Scan parquet") for n in names) == 4
+
+
 def test_census_covers_registry_without_errors(census):
     dict(census.items())  # re-raises the first build exception
     assert sorted(census.built) == sorted(REGISTRY)

@@ -190,6 +190,15 @@ def test_source_hash_sees_shared_helper_edits(monkeypatch):
         "editing the query's defining module must change the source hash"
     )
 
+    # And a plan module the query's module imports helpers from
+    # (extras34 calls llm_ops.cc_edge_set).
+    monkeypatch.undo()
+    base = bench._source_hash("cc_superstep_convergence")
+    monkeypatch.setitem(
+        bench._MODULE_DIGEST_CACHE, "ucl_data_pipeline_spark.plans.llm_ops", "e" * 32
+    )
+    assert bench._source_hash("cc_superstep_convergence") != base
+
 
 def test_source_hash_immune_to_witness_rotation():
     # The per-round EXPORT_FIRST / REWITNESS_CHANGED rotation edits

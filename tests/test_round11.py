@@ -17,8 +17,6 @@
 
 from __future__ import annotations
 
-import inspect
-
 import pytest
 
 import bench
@@ -163,9 +161,7 @@ def test_decile_cuts_one_buffer_matches_percentile_disc(spark):
         want = sorted(
             df.agg(
                 *[
-                    F.expr(
-                        f"percentile_disc({k / 10}) WITHIN GROUP (ORDER BY v)"
-                    ).alias(f"t{k}")
+                    F.expr(reg.sql_percentile_disc(str(k / 10), "v")).alias(f"t{k}")
                     for k in range(1, 10)
                 ]
             )

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -282,6 +281,22 @@ def test_plan_counters_deterministic_and_nonzero(spark, sf_dir):
     df2 = REGISTRY["group_agg_basic"].fn(spark, sf_dir)
     df2.write.format("noop").mode("overwrite").save()
     assert bench._plan_hash(bench._plan_counters(df2)) == bench._plan_hash(c1)
+
+    # Whole node names: an ObjectHashAggregate is not a HashAggregate,
+    # a WindowGroupLimit is not a Window.
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    ids = spark.range(100).withColumn("g", F.col("id") % 3)
+    obj = ids.groupBy("g").agg(F.collect_list("id"))
+    w = Window.partitionBy("g").orderBy("id")
+    top = ids.withColumn("rn", F.row_number().over(w)).filter("rn <= 2")
+    for df in (obj, top):
+        bench._execute(df)
+    c = bench._plan_counters(obj)
+    assert c.get("ObjectHashAggregate", 0) >= 1 and "HashAggregate" not in c
+    assert "WindowGroupLimit" in top._jdf.queryExecution().executedPlan().toString()
+    assert bench._plan_counters(top)["Window"] == 1
 
 
 def test_robust_zscore_sketch_parity_frontier(spark, sf_dir):

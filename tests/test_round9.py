@@ -6,19 +6,30 @@ replaces, and the bucket-first KS twin's substitution audit.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ucl_data_pipeline_spark.plans import REGISTRY
+from ucl_data_pipeline_spark.plans import registry as reg
 from ucl_data_pipeline_spark.plans.registry import (
     bucket_offsets,
     bucketed_row_number,
+    bucketed_running_sum,
     range_bucket,
 )
 from ucl_data_pipeline_spark.sources.io import read_table
 
 
-def test_bucketed_row_number_matches_global_window(spark, sf_dir):
+def _force_buckets(monkeypatch, n: int) -> None:
+    """Pin range_bucket's auto-size to exactly ``n`` buckets (below
+    the row target it resolves to _BUCKET_MIN, sketched at
+    _BUCKET_MAX resolution)."""
+    monkeypatch.setattr(reg, "_BUCKET_MIN", n)
+    monkeypatch.setattr(reg, "_BUCKET_MAX", n)
+
+
+def test_bucketed_row_number_matches_global_window(spark, sf_dir, monkeypatch):
     # The bucketed spelling must be BIT-identical to the global-window
     # row_number it replaces, for any bucket count (including buckets
     # that end up empty at tiny SF).
@@ -30,40 +41,48 @@ def test_bucketed_row_number_matches_global_window(spark, sf_dir):
             F.row_number().over(Window.orderBy("o_orderkey")).alias("rk"),
         ).collect()
     }
-    # None = the round-10 auto-size path (max-resolution sketch +
-    # count in one agg, subsampled split points).
+    # None = the default auto-size (max-resolution sketch + count in
+    # one agg, subsampled split points).
     for n_buckets in (1, 4, 16, None):
-        got = {
-            r["o_orderkey"]: r["rk"]
-            for r in bucketed_row_number(
-                o, "o_orderkey", n_buckets=n_buckets
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            if n_buckets is not None:
+                _force_buckets(m, n_buckets)
+            got = {
+                r["o_orderkey"]: r["rk"]
+                for r in bucketed_row_number(o, "o_orderkey").collect()
+            }
         assert got == want, f"n_buckets={n_buckets}"
 
 
-def test_range_bucket_autosize_matches_fixed16_below_target(spark, sf_dir):
-    # Below the 250k-row target the auto-size resolves to 16 buckets
-    # AND its subsampled split points land on exactly the i/16
-    # quantiles the fixed knob used — identical bucket assignment, so
-    # bench plans at test SFs are unchanged by the auto-size.
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey")
-    fixed = {
-        r["o_orderkey"]: r["__bkt"]
-        for r in range_bucket(o, "o_orderkey", 16).collect()
-    }
-    auto = {
-        r["o_orderkey"]: r["__bkt"]
-        for r in range_bucket(o, "o_orderkey").collect()
-    }
-    assert auto == fixed
+@pytest.mark.parametrize("n_buckets", [None, 4])
+def test_bucketed_walks_order_nulls_first(spark, monkeypatch, n_buckets):
+    # range_bucket puts NULL keys in bucket 0, so the bucketed walks
+    # match the global windows' NULLS FIRST: row_number over a unique
+    # key with one NULL (u), running sum over NULLs and ties (k, id).
+    if n_buckets:
+        _force_buckets(monkeypatch, n_buckets)
+    keys = [None, 3, 1, None, 3, 3, 0, 7, 1, None, 2, 7, 5, 5, 4]
+    df = spark.createDataFrame(
+        [(i, k, 17 * i % 23 if i else None) for i, k in enumerate(keys)],
+        "id int, k int, u int",
+    )
+    w = Window.orderBy("k", "id").rowsBetween(Window.unboundedPreceding, 0)
+    want = df.select(
+        "id",
+        F.row_number().over(Window.orderBy("u")).alias("rk"),
+        F.sum("id").over(w).alias("cum"),
+    )
+    walked, _ = bucketed_running_sum(df, "k", ["k", "id"], F.col("id"))
+    got = bucketed_row_number(df, "u").join(walked.select("id", "cum"), "id")
+    assert sorted(got.select("id", "rk", "cum").collect()) == sorted(want.collect())
+    assert want.filter("id = 0").first().rk == 1
 
 
 def test_range_bucket_is_monotone_in_key(spark, sf_dir):
     c = read_table(spark, sf_dir, "customer").select(
         (-F.col("c_acctbal")).alias("neg")
     )
-    rows = range_bucket(c, "neg", 16).orderBy("neg").collect()
+    rows = range_bucket(c, "neg").orderBy("neg").collect()
     bks = [r["__bkt"] for r in rows]
     assert bks == sorted(bks)
     # equal keys always share a bucket
@@ -74,9 +93,10 @@ def test_range_bucket_is_monotone_in_key(spark, sf_dir):
         seen[r["neg"]] = r["__bkt"]
 
 
-def test_bucket_offsets_exclusive_prefix(spark, sf_dir):
+def test_bucket_offsets_exclusive_prefix(spark, sf_dir, monkeypatch):
+    _force_buckets(monkeypatch, 8)
     o = read_table(spark, sf_dir, "orders").select("o_orderkey")
-    bucketed = range_bucket(o, "o_orderkey", 8)
+    bucketed = range_bucket(o, "o_orderkey")
     per = {
         r["__bkt"]: r["cnt"]
         for r in bucketed.groupBy("__bkt")
@@ -84,10 +104,12 @@ def test_bucket_offsets_exclusive_prefix(spark, sf_dir):
         .collect()
     }
     offs = {
-        r["__bkt"]: r["__off"]
-        for r in bucket_offsets(bucketed, F.lit(1)).collect()
+        r["__bkt"]: (r["__sub"], r["__off"])
+        for r in bucket_offsets(bucketed, F.count("*")).collect()
     }
-    for bkt, off in offs.items():
+    assert len(per) == 8
+    for bkt, (sub, off) in offs.items():
+        assert sub == per[bkt], bkt
         assert off == sum(c for b, c in per.items() if b < bkt), bkt
 
 

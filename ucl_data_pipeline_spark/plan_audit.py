@@ -15,7 +15,9 @@ does not change when the frame runs, so a check over it gives the same
 answer before and after a query executes. With ``cached`` it also
 descends from an InMemoryTableScan into the cached relation's plan:
 ``persist()`` hides the cached lineage there, and Catalyst derives the
-cached relation's size estimate from the same child stats.
+cached relation's size estimate from the same child stats. It also
+returns the plans of the node's subquery expressions (scalar and IN
+subqueries), which are not tree children but run as part of the query.
 
 Three classifiers sit on the walker: ``single_partition_windows`` (the
 CI gate's detector), ``bnlj_findings`` and ``broadcast_findings``.
@@ -29,17 +31,21 @@ def physical_plan(df):
     return df._jdf.queryExecution().executedPlan()
 
 
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
 def children(node, cached: bool = True) -> list:
-    """Child plan nodes of ``node``; see the module docstring for the
-    AdaptiveSparkPlan and InMemoryTableScan descents."""
+    """Child plan nodes of ``node``, then its subquery plans; see the
+    module docstring for the AdaptiveSparkPlan and InMemoryTableScan
+    descents."""
     name = node.nodeName()
     if name == "AdaptiveSparkPlan":
         return [node.initialPlan()]
     kids = []
     if cached and name == "InMemoryTableScan":
         kids.append(node.relation().cachedPlan())
-    cs = node.children()
-    return kids + [cs.apply(i) for i in range(cs.size())]
+    return kids + _seq(node.children()) + _seq(node.subqueries())
 
 
 def walk(node, cached: bool = True):
@@ -64,12 +70,13 @@ def single_partition_windows(df) -> int:
     TakeOrderedAndProject needs no Exchange and is invisible here by
     construction. Stacked windows over one exchange count once per
     Window group (the chain breaks at an inner Window, which is counted
-    on its own visit). Cached plans are not descended into."""
+    on its own visit). Subquery plans are walked; cached plans are
+    not."""
     n_hits = 0
     for node in walk(physical_plan(df), cached=False):
         if node.nodeName() != "Window":
             continue
-        kids = children(node, cached=False)
+        kids = _seq(node.children())
         cur = kids[0] if kids else None
         while cur is not None:
             name = cur.nodeName()
@@ -79,7 +86,7 @@ def single_partition_windows(df) -> int:
                 break
             if name == "Window":
                 break
-            ck = children(cur, cached=False)
+            ck = _seq(cur.children())
             cur = ck[0] if len(ck) == 1 else None
     return n_hits
 
@@ -87,8 +94,7 @@ def single_partition_windows(df) -> int:
 def _build_side(join) -> tuple[str, object]:
     """(build side, build child) of a broadcast join node."""
     side = str(join.buildSide())
-    left, right = children(join)
-    return side, right if side == "BuildRight" else left
+    return side, join.right() if side == "BuildRight" else join.left()
 
 
 # ---------------------------------------------------------------------------

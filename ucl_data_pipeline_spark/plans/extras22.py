@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ucl_data_pipeline_spark.plans.registry import register
+from ucl_data_pipeline_spark.plans.registry import bucketed_rank_select, register
 from ucl_data_pipeline_spark.sources.io import read_table
 
 _DAILY_CTE = """
@@ -55,100 +55,6 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders")
     return o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
-    )
-
-
-def bucketed_rank_select(
-    vals: DataFrame, col: str, ranks: DataFrame, kk: Column, n_buckets: int = 4096
-) -> DataFrame:
-    """Distributed multi-rank selection (guide §5: bound per-task
-    memory): the kk-th smallest value of ``col`` for every row of the
-    small ``ranks`` frame, WITHOUT a global sort and WITHOUT a
-    single-task full-value buffer (the ObjectHashAggregate shape a
-    scalar ``percentile_disc`` pays).
-
-    One count/min/max pass sizes the problem; values histogram into
-    ``n_buckets`` equi-width buckets (bucketing uses a DOUBLE cast —
-    monotone, so it never reorders values, at worst merges neighbors
-    into one bucket); a window over the ≤n_buckets-row count frame
-    locates each rank's target bucket by prefix count; ONLY target
-    buckets' rows are then ranked (row_number ordered by the original
-    column, so ties and decimal precision follow the input type) and
-    the global rank is (rows below the bucket) + (rank within it).
-    Three passes over ``vals`` total — the caller persists ``vals``
-    when its lineage is expensive.
-
-    r13: extracted from ``theil_sen_slope_daily``'s inline spelling so
-    ``quantile_sample_error``'s exact side shares it rather than adding
-    a third exact-quantile spelling (r12 verdict task 5).
-
-    NULLs in ``col`` are dropped before the count and the bucketing, as
-    ``percentile_disc`` ignores them: ``__n`` counts non-NULL values
-    and ranks run over those alone. With no non-NULL value (all-NULL or
-    empty ``vals``) there is no kk-th value and the result has no rows.
-
-    vals:  frame holding numeric column ``col``.
-    ranks: SMALL frame (broadcast everywhere), one row per wanted rank;
-           its column names must not collide with ``col`` or ``__*``.
-    kk:    Column over ranks' columns plus ``__n`` (non-NULL value
-           count), evaluating to the 1-based target rank.
-    Returns one row per ranks row whose rank lies in 1..``__n``:
-    ranks' columns + ``__n`` + ``col``.
-    """
-    vals = vals.filter(F.col(col).isNotNull())
-    v = F.col(col).cast("double")
-    stats = vals.agg(
-        F.count(col).cast("long").alias("__n"),
-        F.min(v).alias("__lo"),
-        F.max(v).alias("__hi"),
-    )
-    targets = stats.crossJoin(F.broadcast(ranks)).withColumn(
-        "__kk", kk.cast("long")
-    )
-    width = (F.col("__hi") - F.col("__lo")) / float(n_buckets)
-    bkt = F.when(
-        F.col("__hi") > F.col("__lo"),
-        F.least(F.floor((v - F.col("__lo")) / width), F.lit(n_buckets - 1)),
-    ).otherwise(F.lit(0))
-    bucketed = vals.crossJoin(F.broadcast(stats)).select(
-        F.col(col), bkt.alias("__bkt")
-    )
-    counts = bucketed.groupBy("__bkt").agg(F.count("*").alias("__c"))
-    below = (
-        F.coalesce(
-            F.sum("__c").over(
-                Window.orderBy("__bkt").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("__below")
-    )
-    hit = counts.select("__bkt", "__c", below).join(
-        F.broadcast(targets),
-        (F.col("__below") < F.col("__kk"))
-        & (F.col("__below") + F.col("__c") >= F.col("__kk")),
-    )
-    # rank rows once per target bucket, THEN attach the (possibly
-    # several) ranks that land in it — joining before row_number would
-    # duplicate rows and corrupt the in-bucket ranking.
-    in_bucket = bucketed.join(
-        F.broadcast(hit.select("__bkt").distinct()), "__bkt"
-    )
-    ranked = in_bucket.withColumn(
-        "__rn", F.row_number().over(Window.partitionBy("__bkt").orderBy(col))
-    )
-    return (
-        ranked.join(
-            F.broadcast(
-                hit.select("__bkt", "__kk", "__below", "__n", *ranks.columns)
-            ),
-            "__bkt",
-        )
-        .filter(F.col("__rn") == F.col("__kk") - F.col("__below"))
-        .select(*ranks.columns, "__n", col)
     )
 
 
@@ -196,12 +102,9 @@ def theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~3M pairs) and CONSTANT in data size; only the per-day hash-agg
     underneath scales with the fact table. The small side is broadcast,
     making the pair generator shuffle-free. The rank-k element is found
-    by DISTRIBUTED SELECTION, never a global sort: histogram the slopes
-    into 4096 equi-width buckets (broadcast min/max), walk the bucket
-    prefix-counts to the bucket containing rank k (a window over the
-    ≤4096-bucket grain), then sort ONLY that bucket's rows — the oracle
-    pins the result with the naive ROW_NUMBER spelling, proving the
-    selection path exact.
+    by DISTRIBUTED SELECTION (registry.bucketed_rank_select), never a
+    global sort — the oracle pins the result with the naive ROW_NUMBER
+    spelling, proving the selection path exact.
     """
     daily = _daily(spark, sf_dir)
     a = daily.select(F.col("day").alias("day_a"), F.col("rev").alias("rev_a"))
@@ -222,11 +125,6 @@ def theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         # day×day expansion per pass — the pagerank persist precedent.
         .persist()
     )
-    # r13: the bucket walk (monotone bucketing: equal slope6 → same
-    # bucket, global rank = rows in lower buckets + rank within) moved
-    # to the shared ``bucketed_rank_select`` so quantile_sample_error's
-    # exact side reuses one selection spelling. kk = ⌈n/2⌉, the lower
-    # median, exactly the old inline (n+1)/2 truncation.
     one = spark.range(1).select(F.lit(1).alias("rid"))
     sel = bucketed_rank_select(
         pairs, "slope6", one, ((F.col("__n") + 1) / 2).cast("long")

@@ -32,18 +32,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ucl_data_pipeline_spark.plans.extras22 import bucketed_rank_select
 from ucl_data_pipeline_spark.plans.extras31 import _h48, _sql_h48
-from ucl_data_pipeline_spark.plans.registry import register
+from ucl_data_pipeline_spark.plans.registry import (
+    bucketed_rank_select,
+    percentile_disc_rank,
+    register,
+    sql_percentile_disc,
+)
 from ucl_data_pipeline_spark.sources.io import read_table
 
 _SAMPLE_K = 1024
 _QS = ("0.25", "0.5", "0.75", "0.9", "0.99")
 _TAG = 2000
-
-
-def _pdisc(q: str, col: str) -> str:
-    return f"percentile_disc({q}) WITHIN GROUP (ORDER BY {col})"
 
 
 _QUANTILE_ORACLE = (
@@ -58,7 +58,7 @@ WITH keyed AS (
   SELECT
 """
     + ",\n".join(
-        f"    CAST({_pdisc(q, 'v')} AS DOUBLE) AS s_{i}"
+        f"    CAST({sql_percentile_disc(q, 'v')} AS DOUBLE) AS s_{i}"
         for i, q in enumerate(_QS)
     )
     + """
@@ -67,7 +67,7 @@ WITH keyed AS (
   SELECT
 """
     + ",\n".join(
-        f"    CAST({_pdisc(q, 'l_extendedprice')} AS DOUBLE) AS e_{i}"
+        f"    CAST({sql_percentile_disc(q, 'l_extendedprice')} AS DOUBLE) AS e_{i}"
         for i, q in enumerate(_QS)
     )
     + """
@@ -101,9 +101,8 @@ def quantile_sample_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a k·partitions merge, NO shuffle of the sampled data, k rows
     on the driver side of the agg regardless of table size. That is
     the entire cost a RangePartitioner-style bounds-picker pays. The
-    exact side is the full sort-based percentile aggregate the sample
-    REPLACES — present to be audited against, like exact_ndv in the
-    KMV audit. Sample error at k=1024 concentrates at
+    exact side is the exact order statistic the sample REPLACES —
+    present to be audited against, like exact_ndv in the KMV audit. Sample error at k=1024 concentrates at
     ~1/(2·sqrt(k)) ≈ 1.6% per quantile.
 
     Determinism: both engines draw the IDENTICAL sample (shared
@@ -130,9 +129,7 @@ def quantile_sample_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs_arr = "array(" + ", ".join(f"{q}D" for q in _QS) + ")"
     sample = keyed.orderBy("h").limit(_SAMPLE_K)
     s = sample.agg(
-        F.expr(
-            f"percentile_disc({qs_arr}) WITHIN GROUP (ORDER BY v)"
-        ).alias("sq")
+        F.expr(sql_percentile_disc(qs_arr, "v")).alias("sq")
     ).select(
         F.explode(
             F.arrays_zip(
@@ -141,27 +138,17 @@ def quantile_sample_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("z")
     ).select("z.quantile", "z.sample_value")
-    # EXACT side (r13, guide §5): the array percentile_disc still
-    # buffered EVERY l_extendedprice in one ObjectHashAggregate task —
-    # the whole table's values in one task's memory, the exact shape
-    # distributed selection exists to avoid. Replaced with the shared
-    # bucketed_rank_select (theil_sen's bucket walk): 3 bounded passes,
-    # no full-table buffer, per-task state ≤ one bucket. The rank rule
-    # is percentile_disc's own cume_dist definition — the smallest k
-    # with k/n ≥ q, evaluated in the same IEEE double comparisons both
-    # engines use — so the selected value is bit-identical to the old
-    # aggregate (verified oracle-exact at sf0.001/0.01/0.1).
+    # EXACT side (r13, guide §5): an array percentile_disc would buffer
+    # EVERY l_extendedprice in one ObjectHashAggregate task; distributed
+    # selection at percentile_disc's own rank is bit-identical to it.
     qs = spark.range(1).select(
         F.explode(F.array(*[F.lit(float(q)) for q in _QS])).alias("quantile")
     )
-    k0 = F.floor(F.col("quantile") * F.col("__n")).cast("long")
-    kk = F.when(
-        (k0 >= 1)
-        & ((k0.cast("double") / F.col("__n").cast("double")) >= F.col("quantile")),
-        k0,
-    ).otherwise(k0 + 1)
     e = bucketed_rank_select(
-        li.select(F.col("l_extendedprice").alias("ev")), "ev", qs, kk
+        li.select(F.col("l_extendedprice").alias("ev")),
+        "ev",
+        qs,
+        percentile_disc_rank("quantile"),
     ).select("quantile", F.col("ev").cast("double").alias("exact_value"))
     return (
         e.join(F.broadcast(s), "quantile")

@@ -54,7 +54,7 @@ from ucl_data_pipeline_spark.plans.graph import (
     pagerank_rank_chain,
 )
 from ucl_data_pipeline_spark.plans.llm_ops import CC_EDGES_SQL_CTES, cc_edge_set
-from ucl_data_pipeline_spark.plans.registry import register
+from ucl_data_pipeline_spark.plans.registry import register, sql_percentile_disc
 from ucl_data_pipeline_spark.sources.io import read_table
 
 # ---------------------------------------------------------------------------
@@ -63,10 +63,6 @@ from ucl_data_pipeline_spark.sources.io import read_table
 
 _PS_K = 256  # sample rows per group: rank error concentrates ~1/(2*sqrt(k)) ~ 3%
 _PS_TAG = 2100
-
-
-def _pdisc(q: str, col: str) -> str:
-    return f"percentile_disc({q}) WITHIN GROUP (ORDER BY {col})"
 
 
 _PS_ORACLE = f"""
@@ -80,20 +76,20 @@ WITH keyed AS (
   QUALIFY ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h, event_id)
           <= {_PS_K}
 ), smed AS (
-  SELECT event_type, CAST({_pdisc("0.5", "v")} AS DOUBLE) AS med_s
+  SELECT event_type, CAST({sql_percentile_disc("0.5", "v")} AS DOUBLE) AS med_s
   FROM samp GROUP BY event_type
 ), smad AS (
   SELECT s.event_type,
-         CAST({_pdisc("0.5", "abs(s.v - m.med_s)")} AS DOUBLE) AS mad_s
+         CAST({sql_percentile_disc("0.5", "abs(s.v - m.med_s)")} AS DOUBLE) AS mad_s
   FROM samp s JOIN smed m USING (event_type)
   GROUP BY s.event_type
 ), emed AS (
   SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_rows,
-         CAST({_pdisc("0.5", "value")} AS DOUBLE) AS med_e
+         CAST({sql_percentile_disc("0.5", "value")} AS DOUBLE) AS med_e
   FROM events GROUP BY event_type
 ), emad AS (
   SELECT e.event_type,
-         CAST({_pdisc("0.5", "abs(e.value - m.med_e)")} AS DOUBLE) AS mad_e
+         CAST({sql_percentile_disc("0.5", "abs(e.value - m.med_e)")} AS DOUBLE) AS mad_e
   FROM events e JOIN emed m USING (event_type)
   GROUP BY e.event_type
 )
@@ -163,26 +159,26 @@ def percentile_sketch_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "v")
     )
     smed = samp.groupBy("event_type").agg(
-        F.expr(_pdisc("0.5", "v")).cast("double").alias("med_s")
+        F.expr(sql_percentile_disc("0.5", "v")).cast("double").alias("med_s")
     )
     smad = (
         samp.join(F.broadcast(smed), "event_type")
         .groupBy("event_type")
         .agg(
-            F.expr(_pdisc("0.5", "abs(v - med_s)"))
+            F.expr(sql_percentile_disc("0.5", "abs(v - med_s)"))
             .cast("double")
             .alias("mad_s")
         )
     )
     emed = e.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_rows"),
-        F.expr(_pdisc("0.5", "value")).cast("double").alias("med_e"),
+        F.expr(sql_percentile_disc("0.5", "value")).cast("double").alias("med_e"),
     )
     emad = (
         e.join(F.broadcast(emed.select("event_type", "med_e")), "event_type")
         .groupBy("event_type")
         .agg(
-            F.expr(_pdisc("0.5", "abs(value - med_e)"))
+            F.expr(sql_percentile_disc("0.5", "abs(value - med_e)"))
             .cast("double")
             .alias("mad_e")
         )
@@ -568,11 +564,11 @@ def _rz_cut_ctes(k: int) -> str:
     return f"""s{k} AS (
   SELECT event_type, v FROM ranked WHERE rn <= {k}
 ), smed{k} AS (
-  SELECT event_type, CAST({_pdisc("0.5", "v")} AS DOUBLE) AS med_s
+  SELECT event_type, CAST({sql_percentile_disc("0.5", "v")} AS DOUBLE) AS med_s
   FROM s{k} GROUP BY event_type
 ), smad{k} AS (
   SELECT s.event_type,
-         CAST({_pdisc("0.5", "abs(s.v - m.med_s)")} AS DOUBLE) AS mad_s
+         CAST({sql_percentile_disc("0.5", "abs(s.v - m.med_s)")} AS DOUBLE) AS mad_s
   FROM s{k} s JOIN smed{k} m USING (event_type)
   GROUP BY s.event_type
 )"""
@@ -626,11 +622,11 @@ WITH keyed AS (
 ), """
     + ", ".join(_rz_cut_ctes(k) for k in _RZ_KS)
     + f""", emed AS (
-  SELECT event_type, CAST({_pdisc("0.5", "value")} AS DOUBLE) AS med_e
+  SELECT event_type, CAST({sql_percentile_disc("0.5", "value")} AS DOUBLE) AS med_e
   FROM events GROUP BY event_type
 ), emad AS (
   SELECT e.event_type,
-         CAST({_pdisc("0.5", "abs(e.value - m.med_e)")} AS DOUBLE) AS mad_e
+         CAST({sql_percentile_disc("0.5", "abs(e.value - m.med_e)")} AS DOUBLE) AS mad_e
   FROM events e JOIN emed m USING (event_type)
   GROUP BY e.event_type
 )
@@ -697,13 +693,13 @@ def robust_zscore_sketch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     emed = e.groupBy("event_type").agg(
-        F.expr(_pdisc("0.5", "value")).cast("double").alias("med_e")
+        F.expr(sql_percentile_disc("0.5", "value")).cast("double").alias("med_e")
     )
     emad = (
         e.join(F.broadcast(emed), "event_type")
         .groupBy("event_type")
         .agg(
-            F.expr(_pdisc("0.5", "abs(value - med_e)"))
+            F.expr(sql_percentile_disc("0.5", "abs(value - med_e)"))
             .cast("double")
             .alias("mad_e")
         )
@@ -715,13 +711,13 @@ def robust_zscore_sketch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in _RZ_KS:
         samp = ranked.filter(F.col("rn") <= k).select("event_type", "v")
         smed = samp.groupBy("event_type").agg(
-            F.expr(_pdisc("0.5", "v")).cast("double").alias("med_s")
+            F.expr(sql_percentile_disc("0.5", "v")).cast("double").alias("med_s")
         )
         smad = (
             samp.join(F.broadcast(smed), "event_type")
             .groupBy("event_type")
             .agg(
-                F.expr(_pdisc("0.5", "abs(v - med_s)"))
+                F.expr(sql_percentile_disc("0.5", "abs(v - med_s)"))
                 .cast("double")
                 .alias("mad_s")
             )

@@ -200,16 +200,10 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     order; class cuts compare exact-range doubles (cum/tot unscaled
     < 2^53); shares are single divisions ROUND 6.
 
-    Scale: one fact pass to part grain, then the range-partitioned
-    cumulative walk (registry.bucketed_running_sum — the shared
-    spelling): bucket the NEGATED revenue (equal
-    revenues share a bucket, so bucket id is monotone in the DESC
-    order), per-bucket cumulative revenue sums with (neg, part)
-    tie-break, plus each bucket's exclusive prefix subtotal from the
-    bounded bucket grain. Decimal addition is exact and associative,
-    so the bucketed walk is bit-identical to a global window — no
-    single-partition sort ever touches the part grain (the docstring's
-    long-promised "usual range-partition refinement", now the plan).
+    Scale: one fact pass to part grain, then the range-bucketed
+    cumulative walk (registry.bucketed_running_sum) over the NEGATED
+    revenue with a (neg, part) tie-break — bit-identical to a global
+    window (exact decimal addition), no single-partition sort.
     Totals come from one scalar agg broadcast back, then a 3-row
     class agg.
     """

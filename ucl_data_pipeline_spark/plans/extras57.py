@@ -486,10 +486,6 @@ def heaps_law_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     types×checkpoints fan-out, no window at gram or doc grain.
     """
     d = read_table(spark, sf_dir, "documents")
-    # Ingestion rank WITHOUT a global window: range-bucketed exact
-    # row_number (registry.bucketed_row_number) — each task sorts only
-    # its doc_id range bucket; offsets come from the bounded bucket
-    # grain.
     ranked = bucketed_row_number(
         d.select(
             "doc_id",

@@ -92,18 +92,10 @@ def monetary_unit_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = read_table(spark, sf_dir, "orders")
     xd = F.col("o_totalprice").cast("decimal(18,2)")
-    # Global cumulative walk WITHOUT a single-partition window
-    # (registry.bucketed_running_sum): per-bucket cumulative sums —
-    # each task scans only its o_orderkey range — plus each bucket's
-    # exclusive prefix subtotal from the bounded bucket grain.
-    # Decimal addition is exact and associative, so the bucketed walk
-    # is bit-identical to the global one.
-    # Offsets AND the grand total both come from the same per-bucket
-    # subtotal frame (bucketed_running_sum's second return): the total
-    # is the sum of the bucket subtotals — exact decimal addition,
-    # identical to a direct SUM over orders — so the walk needs one
-    # fewer full fact scan (r10: the ×100 smoke's residual cost was
-    # pure pass count).
+    # The grand total is the sum of the walk's bucket subtotals (its
+    # second return) — exact decimal addition, identical to a direct
+    # SUM over orders, one fewer full fact scan (r10: the ×100 smoke's
+    # residual cost was pure pass count).
     walked, subs = bucketed_running_sum(
         o.select("o_orderkey", xd.alias("x")),
         "o_orderkey",

@@ -223,9 +223,6 @@ def dedup_saturation_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out, no window at doc grain.
     """
     d = read_table(spark, sf_dir, "documents")
-    # Ingestion rank via the range-bucketed exact row_number
-    # (registry.bucketed_row_number): per-bucket sorts + bounded
-    # offsets — no single-partition window at doc grain.
     ranked = bucketed_row_number(
         d.select("doc_id", F.md5("text").alias("h")), "doc_id"
     ).select("h", "rk")

@@ -13,7 +13,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ucl_data_pipeline_spark.plans.registry import register
+from ucl_data_pipeline_spark.plans.registry import (
+    bucketed_rank_select,
+    percentile_disc_rank,
+    register,
+)
 from ucl_data_pipeline_spark.sources.io import read_table, stats_barrier
 
 # ---------------------------------------------------------------------------
@@ -899,28 +903,18 @@ def range_partition_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank here doubles as the oracle), one broadcast-fold pass to
     assign; no shuffle larger than the final 8-group agg.
     """
-    from ucl_data_pipeline_spark.plans.extras22 import bucketed_rank_select
-
     o = read_table(spark, sf_dir, "orders")
-    # r13 (guide §5): the old spelling ran SEVEN scalar percentile_disc
-    # aggregates in one agg — seven ObjectHashAggregate buffers, each
-    # holding EVERY o_totalprice value in one task (the pre-r8
-    # quantile_sample_error shape). The shared bucketed_rank_select
-    # finds all seven order statistics with bounded per-task state;
-    # the rank rule is percentile_disc's cume_dist definition
-    # (smallest k with k/n ≥ q, IEEE doubles — the helper's proven
-    # spelling), so the boundary VALUES are bit-identical.
+    # r13 (guide §5): seven scalar percentile_disc aggregates would hold
+    # EVERY o_totalprice value in one task each; distributed selection
+    # at percentile_disc's own rank gives bit-identical boundaries.
     fr = spark.range(1).select(
         F.explode(F.array(*[F.lit(float(q)) for q in _RANGE_FRACS])).alias("q")
     )
-    k0 = F.floor(F.col("q") * F.col("__n")).cast("long")
-    kk = F.when(
-        (k0 >= 1)
-        & ((k0.cast("double") / F.col("__n").cast("double")) >= F.col("q")),
-        k0,
-    ).otherwise(k0 + 1)
     bnd = bucketed_rank_select(
-        o.select(F.col("o_totalprice").alias("bv")), "bv", fr, kk
+        o.select(F.col("o_totalprice").alias("bv")),
+        "bv",
+        fr,
+        percentile_disc_rank("q"),
     )
     # bounds array ordered by q (7 rows → one struct-sorted array)
     bounds_row = bnd.agg(
