@@ -55,7 +55,6 @@ import functools
 import hashlib
 import json
 import os
-import re
 import statistics
 import subprocess
 import sys
@@ -63,6 +62,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from ucl_data_pipeline_spark.plan_audit import physical_plan, walk
 from ucl_data_pipeline_spark.plans import REGISTRY
 
 # Per-query NORMALIZED timing history (regression tracker) — see the
@@ -129,9 +129,10 @@ _EXCLUDED_MEAN_TAGS = ("baseline", "iterative")
 # capture exactly what a plan regression would move: shuffle count and
 # kind, join strategy, aggregate/window/sort operators. A token is a
 # node name, optionally followed by the start of the node's detail
-# ("Exchange hashpartitioning"); it is matched against each plan line's
-# WHOLE node name, so "HashAggregate" never counts an
-# ObjectHashAggregate and "Window" never counts a WindowGroupLimit.
+# ("Exchange hashpartitioning"); it is matched against the WHOLE name
+# of each node in a walk of the AQE-final plan, so "HashAggregate"
+# never counts an ObjectHashAggregate and "Window" never counts a
+# WindowGroupLimit.
 _PLAN_TOKENS = (
     "Exchange hashpartitioning",
     "Exchange rangepartitioning",
@@ -150,9 +151,6 @@ _PLAN_TOKENS = (
     "TakeOrderedAndProject",
     "InMemoryTableScan",
 )
-# One plan-string line: tree drawing, an optional whole-stage-codegen
-# "*(N) " marker, then the node name and its detail.
-_PLAN_NODE = re.compile(r"^[\s:+\-]*(?:\*\(\d+\) )?(\w+)(.*)$")
 
 
 def _execute(df) -> None:
@@ -172,23 +170,26 @@ def _plan_counters(df) -> dict[str, int] | None:
     """Nonzero token counts of the POST-EXECUTION physical plan — AQE
     FINAL, guaranteed by _execute() having run df's own
     QueryExecution — the per-query plan fingerprint archived next to
-    its wall-time. None = extraction failed (the query is then
-    excluded from plan-based auto-clearing rather than recorded with a
-    fake pure-scan fingerprint); an EMPTY dict is a real fingerprint
-    (no exchange/join/agg tokens — the pure-scan shape)."""
+    its wall-time. The walk (plan_audit.walk, final mode) descends into
+    query stages, cached relations and subqueries, and counts a reused
+    exchange or subquery where it first appears. None = extraction
+    failed (the query is then excluded from plan-based auto-clearing
+    rather than recorded with a fake pure-scan fingerprint); an EMPTY
+    dict is a real fingerprint (no exchange/join/agg tokens — the
+    pure-scan shape)."""
+    out: dict[str, int] = {}
     try:
-        s = df._jdf.queryExecution().executedPlan().toString()
+        for node in walk(physical_plan(df), final=True):
+            name = node.nodeName()
+            for t in _PLAN_TOKENS:
+                want, _, detail = t.strip().partition(" ")
+                if name != want:
+                    continue
+                if detail and not node.simpleString(8)[len(name):].lstrip().startswith(detail):
+                    continue
+                out[t.strip()] = out.get(t.strip(), 0) + 1
     except Exception:
         return None
-    # An executed AdaptiveSparkPlanExec stringifies BOTH its final and
-    # its initial plan — count tokens in the final section only.
-    s = s.split("== Initial Plan ==")[0]
-    out: dict[str, int] = {}
-    for m in filter(None, map(_PLAN_NODE.match, s.splitlines())):
-        for t in _PLAN_TOKENS:
-            node, _, detail = t.strip().partition(" ")
-            if m[1] == node and m[2].lstrip().startswith(detail):
-                out[t.strip()] = out.get(t.strip(), 0) + 1
     return out
 
 

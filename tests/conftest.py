@@ -32,6 +32,23 @@ def sf_dir() -> str:
     return SF_SMOKE
 
 
+def run_counting_jobs(spark, group: str, fn):
+    """``fn()`` run under the Spark job group ``group`` (a name not used
+    before); returns ``(fn's result, jobs it ran)``. The count comes from
+    the status tracker's per-group lookup after the listener bus drains,
+    so it does not depend on how many jobs the status store retains
+    overall."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @dataclass(frozen=True)
 class Built:
     """One registry query as its function returned it, with the plan
@@ -44,6 +61,7 @@ class Built:
     physical: str  # pre-execution executedPlan() string (isFinalPlan=false)
     optimized: str  # optimizedPlan() string
     windows: int  # plan_audit.single_partition_windows
+    build_jobs: int  # Spark jobs the query function ran (job group census:<name>)
 
 
 class Census:
@@ -74,7 +92,11 @@ class Census:
 
     def _build(self, name: str) -> Built | Exception:
         try:
-            df = REGISTRY[name].fn(self.spark, self.sf_dir)
+            df, jobs = run_counting_jobs(
+                self.spark,
+                f"census:{name}",
+                lambda: REGISTRY[name].fn(self.spark, self.sf_dir),
+            )
             qe = df._jdf.queryExecution()
             return Built(
                 df=df,
@@ -82,6 +104,7 @@ class Census:
                 physical=qe.executedPlan().toString(),
                 optimized=qe.optimizedPlan().toString(),
                 windows=single_partition_windows(df),
+                build_jobs=jobs,
             )
         except Exception as exc:  # noqa: BLE001 — re-raised per request
             return exc

@@ -63,6 +63,20 @@ def test_census_covers_registry_without_errors(census):
     assert sorted(census.built) == sorted(REGISTRY)
 
 
+# Registry-wide Spark jobs fired while building (not executing) every
+# query at sf0.001. Most are eager build steps (split points,
+# localCheckpoint, sizing counts); a parquet schema inference per
+# read_table call made it 945 before reads shared one inferred schema
+# per table and session.
+MAX_REGISTRY_BUILD_JOBS = 400
+
+
+def test_registry_build_jobs_bounded(census):
+    jobs = {name: built.build_jobs for name, built in census.items()}
+    top = sorted(jobs.items(), key=lambda kv: -kv[1])[:10]
+    assert sum(jobs.values()) <= MAX_REGISTRY_BUILD_JOBS, top
+
+
 def test_census_builds_once_and_snapshots_before_execution(spark, sf_dir, monkeypatch):
     name = "acf_table_daily"
     q = REGISTRY[name]

@@ -804,7 +804,7 @@ def test_source_signature_min_of_mins_identity(spark):
 
 
 def test_source_overlap_plan_shape(spark, sf_dir):
-    """PLANS.md property: doc->source collapse happens via map-side
+    """Plan property: doc->source collapse happens via map-side
     partial_min combine (shuffle bytes independent of corpus size) and
     the pairwise stage is a broadcast join over the aggregated table —
     never a cartesian doc-pair stage."""
@@ -860,7 +860,7 @@ def test_join_cardinality_audit_semantics(spark, sf_dir):
 
 
 def test_join_cardinality_audit_plan_shape(spark, sf_dir):
-    """PLANS.md property: every side collapses to key grain with a
+    """Plan property: every side collapses to key grain with a
     map-side partial_count combine BEFORE any join; the only
     non-equi-join stages are the broadcast singleton cross-joins. No
     CartesianProduct, no row-level join of the base tables."""
@@ -923,7 +923,7 @@ def test_join_skew_advisor_salt_ceil_boundary(spark):
 
 
 def test_join_skew_advisor_plan_shape(spark, sf_dir):
-    """PLANS.md property: each key profile is ONE pass over the fact
+    """Plan property: each key profile is ONE pass over the fact
     rows — grain hash-agg with map-side partial_count; the argmax and
     advisory math run on the NDV-grain table via broadcast singletons.
     No CartesianProduct, no sort, no row-level self-join."""
@@ -990,7 +990,7 @@ def test_doc_lm_cross_entropy_semantics(spark, sf_dir):
 
 
 def test_doc_lm_cross_entropy_plan_shape(spark, sf_dir):
-    """PLANS.md property: the corpus LM is a RE-aggregation of the
+    """Plan property: the corpus LM is a RE-aggregation of the
     persisted (doc, token)-grain table — one corpus explode total;
     every shuffle is a grain hash-agg with map-side partial combine;
     the total-token scalar joins as a broadcast singleton. No
@@ -1071,7 +1071,7 @@ def test_kmv_small_cardinality_branch(spark):
 
 
 def test_kmv_plan_shape(spark, sf_dir):
-    """PLANS.md property: the bottom-k is TakeOrderedAndProject over
+    """Plan property: the bottom-k is TakeOrderedAndProject over
     the NDV-grain distinct-hash table (per-partition top-k + k-row
     merge), never a global sort exchange; no CartesianProduct."""
     from ucl_data_pipeline_spark.plans.extras31 import ndv_kmv_sketch_error
@@ -1132,7 +1132,7 @@ def test_kmv_merge_parity_gate(spark, sf_dir):
 
 
 def test_kmv_merge_parity_plan_shape(spark, sf_dir):
-    """PLANS.md property: per-source bottom-k via a window sort
+    """Plan property: per-source bottom-k via a window sort
     WITHIN source partitions; the merged bottom-k is a TakeOrdered
     over the sketch-sized pool (k x |sources| rows max). No
     CartesianProduct."""
@@ -1217,7 +1217,7 @@ def test_quantile_sample_python_reference(spark, sf_dir):
 
 
 def test_quantile_sample_plan_shape(spark, sf_dir):
-    """PLANS.md property: the sample side is a TakeOrderedAndProject
+    """Plan property: the sample side is a TakeOrderedAndProject
     (per-partition bottom-k + k-row merge) — the sampled data is
     never shuffled; the exact side is the audited-against full
     aggregate. No CartesianProduct beyond the broadcast singleton

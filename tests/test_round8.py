@@ -299,6 +299,34 @@ def test_plan_counters_deterministic_and_nonzero(spark, sf_dir):
     assert bench._plan_counters(top)["Window"] == 1
 
 
+def test_plan_counters_count_past_cached_relation(spark):
+    # An executed cached relation prints its own final and initial
+    # plans inside the parent's; the counters walk nodes, so what the
+    # plan holds after the cached scan (here the broadcast side) counts.
+    import bench
+    from pyspark.sql import functions as F
+
+    a = spark.range(1000).withColumn("g", F.col("id") % 7).repartition(3, "g").persist()
+    try:
+        agg = spark.range(500).groupBy((F.col("id") % 7).alias("g")).agg(
+            F.sum("id").alias("s")
+        )
+        df = a.join(F.broadcast(agg), "g")
+        bench._execute(df)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("== Initial Plan ==") > 1
+        c = bench._plan_counters(df)
+    finally:
+        a.unpersist()
+    assert c == {
+        "InMemoryTableScan": 1,
+        "Exchange hashpartitioning": 2,  # the cached repartition, the agg
+        "BroadcastHashJoin": 1,
+        "BroadcastExchange": 1,
+        "HashAggregate": 2,
+    }
+
+
 def test_robust_zscore_sketch_parity_frontier(spark, sf_dir):
     """Decision-level substitution audit: sampled cuts UNDER-flag
     (precision stays >= 0.97 on every row) and the worst-group recall

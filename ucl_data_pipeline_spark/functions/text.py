@@ -121,8 +121,3 @@ def minhash(toks: Column, seed: int) -> Column:
     return F.array_min(
         F.transform(toks, lambda t: F.md5(F.concat(F.lit(f"{seed}:"), t)))
     )
-
-
-def minhash_signature(toks: Column, n_hashes: int = 6) -> list[Column]:
-    """n MinHash values as separate columns (mh_0..mh_{n-1})."""
-    return [minhash(toks, s).alias(f"mh_{s}") for s in range(n_hashes)]

@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) column processing.
 
 Media are opaque ``binary`` columns with a typed metadata struct; all
-decode / feature-extract / resize / frame-sample operators run as
+decode / feature-extract / frame-sample operators run as
 Arrow-batched ``mapInPandas`` — the sanctioned Python escape hatch
 (vectorized batch transfer, never row-at-a-time UDFs). Partitioning,
 schemas, UDF signatures and batch shapes are real and tested; the
@@ -185,12 +185,3 @@ def sample_frames(
         "media_id", "payload"
     )
     return vids.mapInPandas(batches, FRAME_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize — requires a real codec; stub environments get a
-    clear NotImplementedError (the Spark plan shape is identical to
-    extract_features: mapInPandas over pruned binary batches).
-    """
-    _require("pillow")
-    raise NotImplementedError("unreachable without Pillow")  # pragma: no cover

@@ -19,6 +19,11 @@ cached relation's size estimate from the same child stats. It also
 returns the plans of the node's subquery expressions (scalar and IN
 subqueries), which are not tree children but run as part of the query.
 
+With ``final`` the walker follows the plan as it ran instead (the
+AQE-final plan, query stages unwrapped, reused nodes and already
+walked cached plans not re-entered); bench.py's per-query plan
+counters count node names over that walk.
+
 Three classifiers sit on the walker: ``single_partition_windows`` (the
 CI gate's detector), ``bnlj_findings`` and ``broadcast_findings``.
 """
@@ -35,26 +40,46 @@ def _seq(s) -> list:
     return [s.apply(i) for i in range(s.size())]
 
 
-def children(node, cached: bool = True) -> list:
+def children(node, cached: bool = True, final: bool = False) -> list:
     """Child plan nodes of ``node``, then its subquery plans; see the
     module docstring for the AdaptiveSparkPlan and InMemoryTableScan
-    descents."""
+    descents.
+
+    ``final`` walks the plan as it ran: an AdaptiveSparkPlan unwraps to
+    its ``executedPlan()`` (the AQE-final plan once the frame has run),
+    a query stage to the plan it materialized, and a ``Reused*`` node
+    has no children (its plan is walked where it first appears)."""
     name = node.nodeName()
     if name == "AdaptiveSparkPlan":
-        return [node.initialPlan()]
+        return [node.executedPlan() if final else node.initialPlan()]
+    if final:
+        if name.startswith("Reused"):
+            return []
+        if name.endswith("QueryStage"):
+            return [node.plan()]
     kids = []
     if cached and name == "InMemoryTableScan":
         kids.append(node.relation().cachedPlan())
     return kids + _seq(node.children()) + _seq(node.subqueries())
 
 
-def walk(node, cached: bool = True):
-    """Every node under ``node`` (itself included), pre-order."""
+def walk(node, cached: bool = True, final: bool = False):
+    """Every node under ``node`` (itself included), pre-order. In
+    ``final`` mode a cached plan is entered once, at its first scan:
+    it ran once however many scans read it (an iterative query's
+    checkpoint chain would otherwise be walked once per path to it)."""
     stack = [node]
+    entered: set[int] = set()
     while stack:
         cur = stack.pop()
         yield cur
-        stack.extend(reversed(children(cur, cached)))
+        kids = children(cur, cached, final)
+        if final and cached and cur.nodeName() == "InMemoryTableScan":
+            plan_id = kids[0].id()
+            if plan_id in entered:
+                kids = kids[1:]
+            entered.add(plan_id)
+        stack.extend(reversed(kids))
 
 
 def single_partition_windows(df) -> int:

@@ -383,7 +383,7 @@ def not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL simply never matches — returns the real orphan count. Both
     engines must implement identical three-valued logic for this row
     to hash-match; Catalyst plans NOT IN as a null-aware anti join
-    (visible in PLANS.md) rather than a per-row subquery.
+    rather than a per-row subquery.
     """
     read_table(spark, sf_dir, "customer").createOrReplaceTempView("nin_customer")
     read_table(spark, sf_dir, "orders").createOrReplaceTempView("nin_orders")

@@ -4,7 +4,10 @@ The reference infers every schema dynamically via ``pd.read_csv``
 (SURVEY.md §1.2-1.3); this engine declares them. Two families:
 
 - TESTDATA_SCHEMAS: the driver's synthetic TPC-H-ish tables
-  (/root/testdata/sf*/, FIXTURES.md Part B) — used by the query registry.
+  (FIXTURES.md Part B), as their parquet footers infer (the timestamps
+  are naive, ``timestamp_ntz``). ``sources.read_table`` reads with the
+  inferred schema, not these; tests/test_io.py asserts the two agree
+  for every testdata scale factor.
 - REFERENCE_SCHEMAS: the reference pipeline's own tables (FIXTURES.md
   Part A) — used by the pipeline-parity operators and tests. Cites:
   templates/HIST_matches_template.csv:1,
@@ -61,7 +64,7 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
         _f("o_custkey", T.LongType()),
         _f("o_orderstatus", T.StringType()),
         _f("o_totalprice", T.DoubleType()),
-        _f("o_orderdate", T.TimestampType()),
+        _f("o_orderdate", T.TimestampNTZType()),
         _f("o_orderpriority", T.StringType()),
     ]),
     "lineitem": T.StructType([
@@ -75,11 +78,11 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
         _f("l_tax", T.DoubleType()),
         _f("l_returnflag", T.StringType()),
         _f("l_linestatus", T.StringType()),
-        _f("l_shipdate", T.TimestampType()),
+        _f("l_shipdate", T.TimestampNTZType()),
     ]),
     "events": T.StructType([
         _f("event_id", T.LongType()),
-        _f("ts", T.TimestampType()),
+        _f("ts", T.TimestampNTZType()),
         _f("user_id", T.LongType()),
         _f("event_type", T.StringType()),
         _f("value", T.DoubleType()),

@@ -39,8 +39,6 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ucl_data_pipeline_spark.schemas import TESTDATA_SCHEMAS
-
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver synthetic table (parquet) from ``sf_dir``.
@@ -49,13 +47,34 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for free; callers should select/filter as early as convenient but
     correctness never depends on it.
 
+    Schema memo: the first read of a local path in a SparkSession infers
+    the schema from the parquet footers (one Spark job); every later
+    read of that path in the same session passes the inferred schema to
+    the reader and runs no job, as long as the key still matches:
+
+    - the driver-side file listing, ``(name, size, mtime_ns)`` of the
+      file or of every file under the directory;
+    - the session values of the confs that change parquet inference:
+      ``spark.sql.parquet.binaryAsString``, ``.int96AsTimestamp``,
+      ``.inferTimestampNTZ.enabled``, ``.mergeSchema`` and
+      ``spark.sql.legacy.parquet.nanosAsLong``.
+
+    A mismatch infers again and replaces the path's one entry. Entries
+    are held per session through a weak reference, so they go with it.
+    The memo keeps each dataset's own inferred types (the testdata
+    footers are ``timestamp_ntz``; data written from a UTC-adjusted
+    source reads as ``timestamp``); it never substitutes the declared
+    ``TESTDATA_SCHEMAS``. Only local paths are memoized: a path with a
+    scheme (``s3a://``, ``hdfs://``, ``file://``) infers at every read,
+    because the listing is taken with ``os`` on the driver.
+
     ``events.ts`` is parquet TIMESTAMP(MICROS, isAdjustedToUTC=false)
     in all current sf dirs, which reads directly as ``timestamp_ntz`` —
     the naive-timestamp semantic every events oracle assumes. Earlier
     driver testdata shipped TIMESTAMP(NANOS), which the JVM reader
     rejects outright; that shape is handled by a guarded fallback
-    (``_read_events_legacy_nanos``) kept because the testdata's
-    physical type has already changed once between rounds.
+    (``_read_events_legacy_nanos``, not memoized) kept because the
+    testdata's physical type has already changed once between rounds.
 
     Defense-in-depth: the engine does not own the SparkSession it is
     handed (the verification driver builds its own), so the one conf
@@ -71,7 +90,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         try:
-            return spark.read.parquet(path)
+            return _read_parquet(spark, path)
         except Exception as exc:
             # Only the TIMESTAMP(NANOS) schema rejection goes through the
             # legacy fallback; any other failure (missing file, corrupt
@@ -81,7 +100,58 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             if "NANOS" in msg or "Illegal Parquet type" in msg:
                 return _read_events_legacy_nanos(spark, path)
             raise
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
+
+
+# Session confs that change the schema parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+# SparkSession → {absolute path: (key, inferred schema)}; see read_table.
+_SCHEMAS: weakref.WeakKeyDictionary[
+    SparkSession, dict[str, tuple[tuple, T.StructType]]
+] = weakref.WeakKeyDictionary()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _listing(path: str) -> tuple | None:
+    """``(name, size, mtime_ns)`` of the file at ``path``, or of every
+    file under the directory in name order; None when unreadable."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+        return tuple(out)
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` through the schema memo (read_table)."""
+    if "://" in path or (listing := _listing(path)) is None:
+        return spark.read.parquet(path)
+    where = os.path.abspath(path)
+    key = (listing, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(spark, {}).get(where)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS.setdefault(spark, {})[where] = (key, df.schema)
+    return df
 
 
 def _read_events_legacy_nanos(spark: SparkSession, path: str) -> DataFrame:
@@ -470,8 +540,3 @@ def read_jsonl(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All driver synthetic tables as a name→DataFrame dict."""
-    return {name: read_table(spark, sf_dir, name) for name in TESTDATA_SCHEMAS}
